@@ -1,0 +1,8 @@
+package org.apache.spark
+
+/** Waits until every listener event posted so far has been delivered,
+  * so the trace counters are complete before they are read. The
+  * listener bus is package-private to Spark, hence this package. */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
